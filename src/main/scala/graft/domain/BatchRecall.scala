@@ -1040,21 +1040,22 @@ object BatchRecall {
     // back-fill the cores the kw chain's tail leaves idle; the union tail
     // then runs over four tiny checkpointed relations. Rows are identical
     // (the checkpoint is a pass-through and every downstream op is keyed,
-    // not order-sensitive). Batch mode only: a single request keeps the
-    // lazy one-collect plan (its channels are each one tiny job, and the
-    // serving path's TakeOrderedAndProject cuts must stay lazy).
-    // GRAFT_BATCH_OVERLAP=0 restores the inline plan (debug/explain aid).
-    val overlapChannels = !singleRequest &&
-      !sys.env.get("GRAFT_BATCH_OVERLAP").contains("0")
+    // not order-sensitive). Each cut keeps the executed plan of its
+    // channel as an inner child (functions.localCheckpointKeepingPlan), so
+    // `explain()` and plan-shape specs still see the probed-cell partition
+    // filters and the keyword form that ran. Batch mode only: a single
+    // request keeps the lazy one-collect plan (its channels are each one
+    // tiny job, and the serving path's TakeOrderedAndProject cuts must
+    // stay lazy).
     val Seq(vecC, kwC, mdC, trendC) =
-      if (!overlapChannels) Seq(vec, kw, md, trend)
+      if (singleRequest) Seq(vec, kw, md, trend)
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutorService(pool)
         try {
-          val futs = Seq(vec, kw, md, trend).map(c =>
-            scala.concurrent.Future(c.localCheckpoint()))
+          val futs = Seq(vec, kw, md, trend).map(c => scala.concurrent
+            .Future(graft.functions.localCheckpointKeepingPlan(c)))
           futs.map(scala.concurrent.Await
             .result(_, scala.concurrent.duration.Duration.Inf))
         } finally pool.shutdown()

@@ -24,6 +24,17 @@ package object functions {
     */
   def sqlRound4(e: String): String = s"round(($e) + 1e-9, 4) + 0.0"
 
+  /** Eager `localCheckpoint` that keeps the cut plan visible: the result
+    * reads the checkpointed rows, while `explain()` and
+    * `queryExecution.*.toString` still print the executed plan that
+    * produced them (pruned scans, aggregates) as the cut's inner child.
+    * Costs no job beyond the checkpoint's own; release it with
+    * [[releaseCheckpoint]] like any other checkpoint.
+    */
+  def localCheckpointKeepingPlan(
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftshim.CheckpointCutStrategy.localCheckpoint(df)
+
   /** Release the block-manager storage behind a `localCheckpoint`ed frame.
     * `Dataset.unpersist` only consults the cache manager, which does not
     * track checkpoint RDDs — the blocks live on the `LogicalRDD` leaf's
