@@ -713,12 +713,15 @@ object Bench {
     // numbers are the SAME warm seconds already on the total_warm line.
     val perQueryLine = s"""{"metric":"per_query_warm","value":$totalWarm,"unit":"sec","canary_ms":$canaryMs,"errors":$errors,"queries":$warmQs,"sf":"$sfDir"}"""
     // Belt-and-braces (VERDICT r19 item 1 "and/or"): the full records also
-    // land in bench_out.json next to the working directory, immune to any
-    // stdout truncation. One JSON object so a plain json.load reads it.
+    // land in bench_out_c<cpus>.json in the working directory, immune to any
+    // stdout truncation. One JSON object so a plain json.load reads it; one
+    // file per core count so the 8-core pass keeps the 32-core record.
+    val benchOut = s"bench_out_c$cpus.json"
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_out.json"),
+      java.nio.file.Paths.get(benchOut),
       s"""{"per_query":$perQueryLine,"headline":$headlineLine}""")
-    catch { case scala.util.control.NonFatal(_) => () }
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"warning: could not write $benchOut: $e") }
     println(perQueryLine)
     spark.stop()
   }

@@ -131,15 +131,8 @@ object BatchRecall {
     * request) would be equivalent, but those operators do not fold to a
     * LocalRelation, so every broadcast that consumes them pays a one-task
     * Spark job; a planted LocalRelation broadcasts straight from the driver
-    * with no job — worth ~100 ms per served request.
-    */
-  def requestTokenRelations(q: DataFrame): (DataFrame, DataFrame) =
-    requestTokenRelationsFromSeq(q.sparkSession, q.schema("qid").dataType,
-      q.select(col("qid"), col("qtokens")).collect().toSeq.map(r =>
-        (r.get(0), r.getSeq[String](1))))
-
-  /** [[requestTokenRelations]] from already-collected (qid, tokens) pairs —
-    * no Spark round-trip.
+    * with no job — worth ~100 ms per served request. Takes the
+    * already-collected (qid, tokens) pairs, so it makes no Spark round-trip.
     */
   def requestTokenRelationsFromSeq(spark: org.apache.spark.sql.SparkSession,
       qidType: org.apache.spark.sql.types.DataType,
@@ -368,8 +361,9 @@ object BatchRecall {
   /** Pick the batch keyword form for `keywordForm = "auto"` from the
     * index's own persisted stats: `"scan"` when the estimated index-form
     * pair fan-out exceeds [[KeywordScanCrossover]] pairs per scan row,
-    * `"index"` otherwise. Both forms are bitwise-equal (KeywordFormProbe
-    * pins it), so this is a COST decision only. Driver arithmetic — adds
+    * `"index"` otherwise. Both forms are bitwise-equal (DomainSpec "batch
+    * keyword forms are bitwise interchangeable…" pins it), so this is a
+    * COST decision only. Driver arithmetic — adds
     * zero Spark jobs to the request (KeywordAutoFormSpec pins that too).
     */
   def chooseKeywordForm(stats: KeywordStats,

@@ -257,14 +257,21 @@ object Consolidation {
       // future, and fall back to a count over the (now lineage-truncated,
       // tiny) checkpoint rather than blocking forever if the event never
       // lands (a null metric means zero rows flowed — the count also
-      // returns 0 there, so the two paths agree)
-      val changed: Long =
-        scala.util.Try(scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(2, "s")))
-          .toOption
-          .flatMap(r => Option(r.getAs[Any]("n_changed")))
-          .map(_.asInstanceOf[Number].longValue())
-          .getOrElse(propagated.filter(col("_changed")).limit(1).count())
+      // returns 0 there, so the two paths agree). A missed wait costs one
+      // extra job, so it is logged at WARN.
+      val observed = scala.util.Try(scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(2, "s"))).toOption
+      val changed: Long = observed
+        .flatMap(r => Option(r.getAs[Any]("n_changed")))
+        .map(_.asInstanceOf[Number].longValue())
+        .getOrElse {
+          if (observed.isEmpty)
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"connected components round ${iter + 1}: the changed-label " +
+                "observation did not arrive within 2 s; counting the " +
+                "checkpoint instead")
+          propagated.filter(col("_changed")).limit(1).count()
+        }
       converged = changed == 0
       if (!converged) {
         // pointer jump: labels only ever decrease toward the component min,
@@ -288,8 +295,6 @@ object Consolidation {
       // on convergence the propagate step changed nothing and the jump is
       // the identity (see above), so `labels` already holds the fixpoint
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] iter=$iter changed=$changed")
     }
     sym.unpersist()
     // the final labels frame is cached and materialized; collapse it away

@@ -231,8 +231,8 @@ class PreparedRecall(
   // FAST PATH (r11): cached PHYSICAL plan + per-call request-row swap.
   //
   // The per-call fixed cost of recallReplanned is ~100 ms optimizer +
-  // ~25 ms physical planning (ServeProbe decomp). Probing the fully
-  // optimized plan (tools.PhysicalSpliceProbe) shows the request survives
+  // ~25 ms physical planning (r11 per-phase timing). Probing the fully
+  // optimized plan (an r11 physical-splice probe) showed the request survives
   // ONLY as LocalTableScanExec rows — ConvertToLocalRelation folds each
   // request-side Project/Filter chain into a LocalRelation, and no request
   // value reaches any other expression — so the physical plan's SHAPE is
@@ -372,10 +372,11 @@ class PreparedRecall(
       // DEEP-CLONE the template before the swap: every call must execute a
       // fully PRIVATE plan tree. Sharing the unchanged (static-side) nodes
       // across concurrent executions measurably cross-served results
-      // between threads (FastConcurrencyProbe: 4-5/40 calls returned
-      // another in-flight query's rows; a plan cloned per call is 0/40 over
-      // every probe run). ROOT CAUSE (r12, tools.SharedPlanRaceProbe — a
-      // standalone plain-Spark repro, 17-20/80 divergent): the stateful
+      // between threads (r11 concurrency probe: 4-5/40 calls returned
+      // another in-flight query's rows; a plan cloned per call was 0/40 over
+      // every probe run; PreparedRecallSpec "one handle serves 8 concurrent
+      // threads with per-thread parity" pins the contract). ROOT CAUSE (r12,
+      // a standalone plain-Spark repro, 17-20/80 divergent): the stateful
       // class is any CodegenSupport node — its mutable `parent` field is
       // written during WholeStageCodegen's produce/consume compilation
       // walk, so two concurrent walks over a SHARED node cross-wire the
@@ -398,12 +399,7 @@ class PreparedRecall(
       // clone() is the one mechanism that forces fresh instances
       // (mapChildren(forceCopy = true) internally). The per-call row swap
       // itself survives only because swapped rows differ structurally.
-      // GRAFT_FAST_SHARE=1 (diagnosis only): skip the clone so
-      // FastConcurrencyProbe can re-demonstrate the shared-state race.
-      val base =
-        if (sys.env.contains("GRAFT_FAST_SHARE")) fs.physical
-        else fs.physical.clone().asInstanceOf[SparkPlan]
-      Some(base.transformUp {
+      Some(fs.physical.clone().asInstanceOf[SparkPlan].transformUp {
         case l: LocalTableScanExec if freshRows.contains(l.output.map(_.name)) =>
           l.copy(rows = freshRows(l.output.map(_.name)))
       })
@@ -432,55 +428,10 @@ class PreparedRecall(
   /** Which evidence gate decided each class's fate — "enabled[...]" or the
     * first failing gate's name, KEYED BY ServeClass so a later lazy build
     * of another class cannot overwrite the diagnosis the caller asked
-    * about (diagnosis surface for ServeProbe/specs).
+    * about (diagnosis surface for specs).
     */
   private val fastGates =
     new java.util.concurrent.ConcurrentHashMap[ServeClass, String]()
-
-  /** Pre-validation candidates keyed by ServeClass, kept for diagnosis
-    * tooling only (FastServeDebug) — NEVER served to callers.
-    */
-  private val fastCandidates =
-    new java.util.concurrent.ConcurrentHashMap[ServeClass, FastState]()
-
-  private def candidateFor(query: String): Option[FastState] =
-    Option(fastCandidates.get(serveClassOf(query)))
-
-  /** Diagnosis-only: run the fast path even when validation rejected it. */
-  private[graft] def fastRecallUnsafe(query: String): Option[DataFrame] =
-    candidateFor(query).flatMap(runFast(_, query))
-
-  /** Diagnosis-only: the cached physical template's tree string (the
-    * query's own class, so concurrent other-class builds can't swap it).
-    */
-  private[graft] def fastPlanString(query: String = Marker): String =
-    candidateFor(query).map(_.physical.toString).getOrElse("no candidate")
-
-  /** Diagnosis-only: per-phase timing of one fast call (ServeProbe). */
-  private[graft] def fastDecomp(query: String): String =
-    candidateFor(query).map { fs =>
-      val t0 = System.nanoTime()
-      val qData = relationData(query, None)
-      val t1 = System.nanoTime()
-      val declined = fs.absent.exists(i =>
-        foldSubtree(fs.subtrees(i), qData).exists(_.data.nonEmpty))
-      val needed = fs.feeds.map(_.subtreeIdx).distinct
-      val folds = needed.flatMap(i =>
-        foldSubtree(fs.subtrees(i), qData).map(i -> _)).toMap
-      val t2 = System.nanoTime()
-      val freshRows = fs.feeds.map(f =>
-        f.names -> projectRows(folds(f.subtreeIdx), f.indices)).toMap
-      val fresh = fs.physical.transformUp {
-        case l: LocalTableScanExec if freshRows.contains(l.output.map(_.name)) =>
-          l.copy(rows = freshRows(l.output.map(_.name)))
-      }
-      val t3 = System.nanoTime()
-      val n = fresh.executeCollect().length
-      val t4 = System.nanoTime()
-      f"reqdata=${(t1 - t0) / 1e6}%6.1f folds=${(t2 - t1) / 1e6}%6.1f " +
-        f"swap=${(t3 - t2) / 1e6}%6.1f exec=${(t4 - t3) / 1e6}%6.1f ms " +
-        f"rows=$n declined=$declined"
-    }.getOrElse("no candidate")
 
   /** A serving class = which request-side channels are ACTIVE (keyword /
     * phrase-only / trending × metadata). The optimizer folds these gates
@@ -529,7 +480,7 @@ class PreparedRecall(
       // the key's HASH BIN, so two builds can transiently serialize on a
       // bin collision — latency-only, never a correctness issue) — build
       // them concurrently, the same concurrency contract serving itself
-      // runs under (FastConcurrencyProbe). Await.result rethrows a
+      // runs under (PreparedRecallSpec's 8-thread test). Await.result rethrows a
       // build-thread failure at prepare time instead of deferring it to
       // first use.
       import scala.concurrent.{Await, Future}
@@ -681,29 +632,26 @@ class PreparedRecall(
       // a LeafExecNode, so the per-call clone() copies the wrapper but
       // SHARES the exchange beneath — static broadcasts/shuffles compute
       // once per template, request-dependent nodes stay privately cloned
-      // (the concurrency backstop is untouched: FastConcurrencyProbe must
-      // stay 0/40; identical static data cannot cross-serve requests, and
+      // (the concurrency backstop is untouched: PreparedRecallSpec "one
+      // handle serves 8 concurrent threads with per-thread parity" must
+      // stay green; identical static data cannot cross-serve requests, and
       // the race MECHANISM — CodegenSupport's mutable parent field, see
       // runFast — cannot fire here because a shared exchange's subtree
       // codegen-compiles exactly once under its lazy-val guard, never
       // concurrently per call).
       // An exchange is static iff its subtree has no scan the per-call
       // swap could target — the SAME schema-match criterion the swap uses.
-      // GRAFT_FAST_NOREUSE=1 restores the r11 clone-everything behavior
-      // (A/B + race diagnosis).
       val feedSchemas: Set[Seq[String]] = feeds.map(_.names).toSet
       def hasFeedScan(p: SparkPlan): Boolean = p.exists {
         case l: LocalTableScanExec => feedSchemas.contains(l.output.map(_.name))
         case _ => false
       }
-      val physShared =
-        if (sys.env.contains("GRAFT_FAST_NOREUSE")) phys
-        else phys.transformUp {
-          case e: org.apache.spark.sql.execution.exchange.Exchange
-              if !hasFeedScan(e) =>
-            org.apache.spark.sql.execution.exchange.ReusedExchangeExec(
-              e.output, e)
-        }
+      val physShared = phys.transformUp {
+        case e: org.apache.spark.sql.execution.exchange.Exchange
+            if !hasFeedScan(e) =>
+          org.apache.spark.sql.execution.exchange.ReusedExchangeExec(
+            e.output, e)
+      }
       // DRIVER-LOCAL request broadcasts (r13): a request-side
       // BroadcastExchangeExec whose child is a bare feed LocalTableScan
       // still pays a 1-task collect JOB per call for rows the swap just
@@ -711,24 +659,17 @@ class PreparedRecall(
       // LocalTableScanExec.executeCollect (job-free) and builds the
       // relation driver-side exactly like the stock exchange's future
       // does — removing four jobs (and their submit round-trips) from
-      // every fast call. GRAFT_FAST_NOLOCALBC=1 restores the stock
-      // exchanges for A/B.
-      // env for process-level A/B, system property for same-process
-      // interleaved A/B (ServePartsProbe-style, set per handle build)
-      val physLocalBc =
-        if (sys.env.contains("GRAFT_FAST_NOLOCALBC") ||
-          sys.props.contains("graft.fast.nolocalbc")) physShared
-        else physShared.transformUp {
-          case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-              if b.child.isInstanceOf[LocalTableScanExec] &&
-                hasFeedScan(b.child) =>
-            org.apache.spark.sql.graftshim.LocalTableBroadcastExec(
-              b.mode, b.child)
-        }
+      // every fast call.
+      val physLocalBc = physShared.transformUp {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+            if b.child.isInstanceOf[LocalTableScanExec] &&
+              hasFeedScan(b.child) =>
+          org.apache.spark.sql.graftshim.LocalTableBroadcastExec(
+            b.mode, b.child)
+      }
       val candidate =
         FastState(physLocalBc, physLocalBc.output, subtrees, subNames, feeds,
           absent)
-      fastCandidates.put(cls, candidate)
       // end-to-end validation across the query classes: every query the
       // fast path ACCEPTS must match the replanned results exactly; a
       // cross-class query declining is correct by construction (class

@@ -350,8 +350,9 @@ object Dedup {
     // emits within-bucket pairs when i = j and strictly cross-bucket pairs
     // when i < j — so every (a, b) pair of the hot shingle is emitted
     // EXACTLY once (in task (min(g_a, g_b), max(g_a, g_b))), the emitted
-    // pair multiset is identical (oracle hash unchanged; pinned by a
-    // forced-low-cutoff equality test), and no task ever holds more than
+    // pair multiset is identical (oracle hash unchanged; pinned by
+    // DedupQualitySpec "ngram-Jaccard: the hot-shingle split at cutoff 2
+    // returns the default cutoff's rows bitwise"), and no task ever holds more than
     // ~2·cutoff docs / ~cutoff² pairs. The bucket key derives
     // deterministically from doc_id (pmod(xxhash64), guide §2.5 — never
     // rand()). The hot-key table is df > cutoff only — bounded and tiny at
@@ -704,7 +705,8 @@ object Dedup {
     * Uses BOUNDED per-bucket pair generation
     * ([[Similarity.boundedBandedPairs]]): the CC consumer only needs
     * connectivity, so a duplicate mega-bucket contributes O(k) candidates,
-    * not C(k,2) — PipelineScaleProbe measures the difference.
+    * not C(k,2) (measured super-linear in the all-pairs form: see
+    * [[Similarity.boundedBandedPairs]]).
     */
   def semanticDedup(vectors: DataFrame, threshold: Double): DataFrame = {
     // the pair graph feeds BOTH the vertex derivation and the CC edge side
@@ -1105,7 +1107,7 @@ object Dedup {
     * hashed n = 50 output (8-byte grams, the paper's operating point)
     * without re-detecting. `sources` needs (doc_id, source). One
     * fingerprint-free join on doc_id + a combiner count/sum aggregate —
-    * linear; PipelineScaleProbe runs this composition per size.
+    * linear.
     */
   def dupRateBySource(spans: DataFrame, sources: DataFrame): DataFrame =
     spans

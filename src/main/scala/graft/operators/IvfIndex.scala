@@ -570,25 +570,17 @@ object IvfIndex {
     * ranking them by cosine could probe the wrong cells on unnormalized
     * embeddings (a vector's own cell might not even rank first). Sign
     * buckets have no stored geometry to be faithful to, so cosine stays
-    * the ranking there. Measured (`tools.IvfProbeMetricProbe`, clustered
+    * the ranking there. Measured (r15 probe-metric probe, clustered
     * document vectors, nprobe 4/8/16 at sf0.01 AND sf0.1): the two
     * rankings probe identical cells on this data — recall@10 0.80/0.93/
     * 0.99 either way at sf0.1 — so the metric match costs nothing and
     * removes the unnormalized-embedding failure mode.
     */
   def probeCells(spark: SparkSession, path: String, qvec: Array[Float],
-      nprobe: Int): Seq[Long] =
-    probeCellsWith(spark, path, qvec, nprobe,
-      if (quantizerOf(path) == "kmeans") "l2" else "cosine")
-
-  /** [[probeCells]] with an explicit cell-ranking metric — the seam
-    * `tools.IvfProbeMetricProbe` measures both through.
-    */
-  private[graft] def probeCellsWith(spark: SparkSession, path: String,
-      qvec: Array[Float], nprobe: Int, metric: String): Seq[Long] = {
+      nprobe: Int): Seq[Long] = {
     val cents = spark.read.parquet(s"$path/centroids")
-    val scored = metric match {
-      case "l2" =>
+    val scored = quantizerOf(path) match {
+      case "kmeans" =>
         val q = typedlit(qvec.map(_.toDouble).toSeq)
         cents.withColumn("cscore",
           -aggregate(
@@ -624,7 +616,7 @@ object IvfIndex {
   }
 
   /** The cells one query vector probes, ranked exactly like
-    * [[probeCellsWith]] (score desc, cell asc) in driver-local arithmetic:
+    * [[probeCells]] (score desc, cell asc) in driver-local arithmetic:
     * negative squared-L2 for a k-means quantizer, cosine (zero-norm -> 0,
     * the [[graft.functions.VectorFunctions.cosineSim]] convention) for
     * sign buckets.

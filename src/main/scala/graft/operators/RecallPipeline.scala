@@ -83,8 +83,8 @@ object RecallPipeline {
     * before ranking so rank order is reproducible across engines.
     */
   /** The (memories, queries) inputs of [[batchRecall100]], factored out so
-    * the IVF A/B probe (`tools.BatchRecallIvfProbe`) drives the IDENTICAL
-    * corpus and request mix the oracle-gated query runs. Memories come back
+    * DomainSpec drives the IDENTICAL corpus and request mix the
+    * oracle-gated query runs. Memories come back
     * cached (caller unpersists).
     */
   def batchRecall100Inputs(spark: SparkSession, dir: String)

@@ -782,19 +782,10 @@ object LocomoMini {
     * (+ enrichment-style entity:people:<slug> tags for named third
     * parties), dialog-id + session-datetime metadata, importance 0.5.
     */
-  def memories(spark: SparkSession): DataFrame =
-    memoriesFor(spark, turns, (c, s) => SessionStart((c, s)))
-
-  /** [[memories]] over an arbitrary turn set + session-start function — the
-    * seam the full-shaped tier ([[LocomoFull]]) ingests through so both
-    * tiers share one ingest shape (the [[LongMemEvalMini.memoriesFor]]
-    * precedent).
-    */
-  def memoriesFor(spark: SparkSession, turns: Seq[Turn],
-      sessionStart: (Int, Int) => Timestamp): DataFrame = {
+  def memories(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val rows = turns.map { u =>
-      val start = sessionStart(u.conv, u.session)
+      val start = SessionStart((u.conv, u.session))
       val ts = new Timestamp(start.getTime + u.idx * 60000L)
       val tags = Seq("locomo-test", s"conversation:conv-${u.conv}",
         s"session:${u.session}", s"speaker:${u.speaker.toLowerCase}") ++
@@ -917,7 +908,7 @@ object LocomoMini {
     * the pinned goldens outranks the wall-clock. Instead the session is
     * tuned for the 129-row corpus while the questions run: AQE off (its
     * per-stage re-planning only pays off on real shuffles) and few shuffle
-    * partitions — ~2x per question (tools.RecallProfile measurement).
+    * partitions — ~2x per question (r9 recall profile).
     */
   def rankings(spark: SparkSession): Map[Int, Seq[String]] =
     scoredRankings(spark).view.mapValues(_.map(_._1)).toMap
@@ -928,28 +919,19 @@ object LocomoMini {
   def scoredRankings(spark: SparkSession): Map[Int, Seq[(String, Double)]] = {
     val mem = memories(spark).cache()
     mem.count()
-    try scoredRankingsOver(spark, mem, edges(spark), questions)
-    finally mem.unpersist()
-  }
-
-  /** [[scoredRankings]] over an arbitrary cached corpus + question set —
-    * the seam [[LocomoFull]] scores through, so metric inputs share one
-    * definition across tiers. Session tuning (AQE off, 4 shuffle
-    * partitions) is applied around the loop exactly as the mini tier does.
-    */
-  def scoredRankingsOver(spark: SparkSession, mem: DataFrame, es: DataFrame,
-      qs: Seq[Question]): Map[Int, Seq[(String, Double)]] = {
+    val es = edges(spark)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
-      qs.zipWithIndex.map { case (q, i) =>
+      questions.zipWithIndex.map { case (q, i) =>
         i -> answerScored(mem, es, q)
       }.toMap
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      mem.unpersist()
     }
   }
 }

@@ -30,8 +30,9 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * ≤12-term derivations). It is not an exchange the planner can pick, not
   * AQE-visible, and never carries corpus data. Per-call clones each get a
   * fresh instance, so the lazy broadcast is per-request state exactly like
-  * the swapped scan rows themselves (no cross-call sharing; the
-  * FastConcurrencyProbe backstop covers the concurrency contract).
+  * the swapped scan rows themselves (no cross-call sharing; PreparedRecallSpec
+  * "one handle serves 8 concurrent threads with per-thread parity" pins the
+  * concurrency contract).
   */
 case class LocalTableBroadcastExec(mode: BroadcastMode, child: SparkPlan)
     extends UnaryExecNode {

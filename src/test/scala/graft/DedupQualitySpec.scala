@@ -92,6 +92,19 @@ class DedupQualitySpec extends AnyFunSuite {
     assert(r4 > r5, "looser threshold must strictly add recall here")
   }
 
+  test("ngram-Jaccard: the hot-shingle split at cutoff 2 returns the " +
+    "default cutoff's rows bitwise") {
+    // each planted group shares most shingles across its 4 variants, so at
+    // cutoff 2 those shingles (df 3-4) take the two-level bucket-pair path
+    // that the default cutoff (1024) never reaches at this size
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      try df.collect().toSeq finally graft.functions.releaseCheckpoint(df)
+    val default = rows(Dedup.ngramJaccardPairs(spark, dir))
+    val split = rows(Dedup.ngramJaccardPairs(spark, dir, hotShingleCutoff = 2))
+    assert(default.nonEmpty)
+    assert(split == default)
+  }
+
   test("winnowing finds planted near-dups; distractors stay below minShared") {
     val (r, p) = score("winnowing",
       pairsOf(Dedup.winnowingPairs(spark, dir)))

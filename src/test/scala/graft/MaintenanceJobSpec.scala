@@ -78,6 +78,31 @@ class MaintenanceJobSpec extends AnyFunSuite {
       s"near keeper is the exact SURVIVOR 4: $byId")
   }
 
+  test("the embedding audit runs over Ingest.prepare's own uuid ids") {
+    import spark.implicits._
+    // the same content at two timestamps: not exact twins (script key), but
+    // identical embeddings, so the later-sorting uuid is a near-dup
+    val store = graft.domain.Ingest.prepare(Seq(
+        ("the recovery accident", "2024-01-01"),
+        ("the recovery accident", "2024-02-01"),
+        ("an unrelated memory about editors", "2024-03-01"))
+      .toDF("content", "timestamp")).localCheckpoint()
+    try {
+      val ids = store.select("id").as[String].collect().sorted.toSeq
+      val twins = store.filter(col("content") === "the recovery accident")
+        .select("id").as[String].collect().sorted.toSeq
+      val plan = MaintenanceJob.dedupPlan(
+        store.select("id", "content", "timestamp"),
+        Some(store.select(col("id").as("vec_id"), col("embedding"))))
+      val byId = plan.collect()
+        .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+      assert(byId.keySet == ids.toSet, s"one verdict per id: $byId")
+      assert(byId(twins(0)) == ("keep", null))
+      assert(byId(twins(1)) == ("delete_near_dup", twins(0)), s"got $byId")
+      assert(byId((ids.toSet -- twins).head)._1 == "keep")
+    } finally graft.functions.releaseCheckpoint(store)
+  }
+
   test("main: report mode writes plan+summary only, --apply writes the " +
     "filtered store, and the plan over kept output is a fixed point") {
     val root = java.nio.file.Files.createTempDirectory("graft-maint")

@@ -71,15 +71,18 @@ class PcaSpec extends AnyFunSuite {
   }
 
   test("fast per-partition covariance is round4-identical to the declarative one") {
-    val vecs = Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .select(col("vec_id"), col("embedding")).repartition(7)
-    val slow = Pca.covariance(vecs).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val fast = Pca.covarianceFast(vecs).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(fast.keySet == slow.keySet)
-    val diffs = fast.collect { case (k, v) if v != slow(k) => (k, v, slow(k)) }
-    assert(diffs.isEmpty, s"divergent entries: ${diffs.take(5)}")
+    // 130 partitions exceed Pca.CovMergeGroup (64): the grouped pre-merge
+    for (parts <- Seq(7, 130)) {
+      val vecs = Tables.embeddings(spark, "/root/testdata/sf0.001")
+        .select(col("vec_id"), col("embedding")).repartition(parts)
+      val slow = Pca.covariance(vecs).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val fast = Pca.covarianceFast(vecs).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(fast.keySet == slow.keySet, s"$parts partitions")
+      val diffs = fast.collect { case (k, v) if v != slow(k) => (k, v, slow(k)) }
+      assert(diffs.isEmpty, s"$parts partitions, divergent entries: ${diffs.take(5)}")
+    }
   }
 
   test("projection plan is a single projection — no join, no shuffle") {
