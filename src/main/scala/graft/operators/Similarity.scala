@@ -134,14 +134,12 @@ object Similarity {
     * emitted link verifies (the identical-embedding case), the bucket is
     * exactly as connected as the unsalted form: members chain within
     * their salt, star to their salt anchor, anchors chain to each other.
-    * The salt is `vec_id % salts` (not a hash) so the DuckDB oracle
-    * mirrors it token-for-token; `salts = 1` degenerates to the unsalted
-    * r12 plan (the probe baseline). Ids that are not integral (uuid
-    * strings from `Ingest.prepare`) cannot take a bare `pmod`, which
-    * casts them to BIGINT and throws under ANSI: they salt by the id's
-    * BIGINT value where it parses (so digit-string ids keep their salt)
-    * and by its xxhash64 otherwise. The choice is made at plan time from
-    * the `vec_id` type, so integral ids keep the mirrored plan.
+    * The salt is the id's BIGINT value mod `salts`, else its xxhash64 mod
+    * `salts`: integral and digit-string ids salt by value (not a hash), so
+    * the DuckDB oracle mirrors it token-for-token, and uuid strings from
+    * `Ingest.prepare` (which a bare `pmod` would cast to BIGINT, throwing
+    * under ANSI) by hash. `salts = 1` degenerates to the unsalted r12
+    * plan (the probe baseline).
     */
   def boundedBandedPairs(e: DataFrame, bits: Int = 8,
       threshold: Double = 0.9, salts: Int = 64): DataFrame = {
@@ -153,16 +151,12 @@ object Similarity {
     // bytes (guide §2.4); (b) chain and star links are emitted in ONE pass
     // over the windowed rows via a 2-struct explode — the previous
     // chain/star filter-split re-ran the whole window subtree per consumer.
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val saltKey = e.schema("vec_id").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => col("vec_id")
-      case _ => coalesce(col("vec_id").try_cast("bigint"), xxhash64(col("vec_id")))
-    }
     val banded = e.select(col("vec_id"), col("embedding"),
       explode(array(Seq(0, 8, 16, 24).map(off =>
         concat_ws(":", lit(off.toString),
           signBucketAt(col("embedding"), bits, off))): _*)).as("bucket"))
-      .withColumn("salt", pmod(saltKey, lit(salts.toLong)))
+      .withColumn("salt", pmod(coalesce(col("vec_id").try_cast("bigint"),
+        xxhash64(col("vec_id"))), lit(salts.toLong)))
     val w = Window.partitionBy(col("bucket"), col("salt"))
       .orderBy(col("vec_id"))
     val nbrs = banded

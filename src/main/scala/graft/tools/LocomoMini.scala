@@ -919,19 +919,20 @@ object LocomoMini {
   def scoredRankings(spark: SparkSession): Map[Int, Seq[(String, Double)]] = {
     val mem = memories(spark).cache()
     mem.count()
-    val es = edges(spark)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try {
-      questions.zipWithIndex.map { case (q, i) =>
-        i -> answerScored(mem, es, q)
-      }.toMap
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      mem.unpersist()
-    }
+      val es = edges(spark)
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      val prevParts = spark.conf.get("spark.sql.shuffle.partitions", "32")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.conf.set("spark.sql.shuffle.partitions", "4")
+      try {
+        questions.zipWithIndex.map { case (q, i) =>
+          i -> answerScored(mem, es, q)
+        }.toMap
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
+    } finally mem.unpersist()
   }
 }
